@@ -8,7 +8,8 @@ argparse parser; `--testing` is a flag, and any filesystem URI works
 Input dir must contain `citations.txt` and `published-dates.txt`
 (reference text formats); `nodepairs.csv` is optional — without it the
 diameter denominator is computed from the BFS itself (the spec's d=20
-definition, docs/PA1.pdf p.3).
+definition, docs/PA1.pdf p.3). A present but malformed `nodepairs.csv`
+is an error, not a silent fallback.
 """
 
 from __future__ import annotations
@@ -41,6 +42,7 @@ def main(argv: list[str] | None = None) -> int:
         hop_plot_df,
         snapshot_edges,
     )
+    from .lineage import _fs_exists
     from .session import get_spark
     from .sources import (
         load_citations,
@@ -61,14 +63,15 @@ def main(argv: list[str] | None = None) -> int:
         print(f"wrote {args.output_dir}/densities")
         return 0
 
-    # diameter: per-year hop plots
-    try:
+    # diameter: per-year hop plots. Only a MISSING nodepairs.csv falls back
+    # to the BFS denominator; an unreadable or malformed one raises.
+    nodepairs = f"{args.input_dir}/nodepairs.csv"
+    totals = {}
+    if _fs_exists(spark, nodepairs):
         totals = {
             r["year"]: r["total_pairs"]
-            for r in load_nodepairs(spark, f"{args.input_dir}/nodepairs.csv").collect()
+            for r in load_nodepairs(spark, nodepairs).collect()
         }
-    except Exception:
-        totals = {}
     years = sorted(
         r["year"] for r in published.select("year").distinct().collect()
     )

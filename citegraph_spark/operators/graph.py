@@ -8,20 +8,22 @@ Analytics.scala:152-414). Here everything is DataFrame ops:
 - snapshot (G2): double vertex join + year filter + bidirectional union.
 - hop-plot (G4-G9): frontier BFS over *pairs* — the frontier carries
   12-byte (src, dst) rows instead of the reference's O(d)-length path
-  arrays, the `seen` set is canonical (unordered) pairs, and lineage is
-  truncated with cut_lineage (localCheckpoint by default; DFS-backed
-  checkpoint behind spark.citegraph.reliableCheckpoint — lineage.py)
-  so per-round counts don't recompute
-  history (the reference recomputes the full lineage every round —
-  SURVEY.md §4.3).
+  arrays, and the `seen` set is canonical (unordered) pairs. One rule per
+  round: every round before `max_d` truncates the lineage of its new
+  pairs and of the grown `seen` with cut_lineage (localCheckpoint by
+  default; DFS-backed checkpoint behind
+  spark.citegraph.reliableCheckpoint — lineage.py), so per-round counts
+  don't recompute history (the reference recomputes the full lineage
+  every round — SURVEY.md §4.3); the `max_d` round only counts.
 
 Scale notes (100 TB thinking): the BFS `seen` set is the true output
 size — O(connected pairs) — and is unavoidable for exact hop-plots; every
 round shuffles only the frontier joined against the (bidirectional) edge
 table partitioned on `src`. Edges are repartitioned once on the join key
-and persisted so every round's join reuses the same partitioning; with
-AQE the frontier side coalesces as it shrinks. For approximate hop-plots
-at extreme scale, see `functions.sketches.hyperball` (HyperLogLog-based).
+and persisted — the loop's only persisted state — so every round's join
+reuses the same partitioning; with AQE the frontier side coalesces as it
+shrinks. For approximate hop-plots at extreme scale, see
+`functions.sketches.hyperball` (HyperLogLog-based).
 """
 
 from __future__ import annotations
@@ -211,133 +213,107 @@ def _local_pairs_by_distance(
 def connected_pairs_by_distance(
     edges: DataFrame,
     max_d: int = 20,
-    checkpoint_every: int = 3,
     local_threshold: int = 2000,
 ) -> list[tuple[int, int]]:
     """Frontier BFS over pairs: returns [(d, cumulative #unordered connected
     pairs with shortest distance <= d)] until convergence or max_d.
 
+    Input contract: `edges` is symmetric (both orientations of every
+    edge), distinct and loop-free — exactly what `bidirectional` and
+    `snapshot_edges` produce, and what every caller passes. So the d=1
+    pairs are the edges with src < dst, with no dedup shuffle.
+
     Invariant per round: `frontier` holds DIRECTED pairs at shortest
     distance exactly d (both orientations — needed so the next hop can
     extend from either end); `seen` holds CANONICAL pairs at distance <= d.
     A distance-(d+1) pair is always a distance-d pair extended by one edge,
-    so candidates = frontier ⋈ edges, anti-joined against seen.
+    so candidates = frontier ⋈ edges, minus seen. Every round before
+    `max_d` cuts the lineage of its new pairs and of the grown `seen`
+    (cut_lineage), so no count recomputes earlier rounds; the `max_d`
+    round only counts and builds no further state.
 
     Graphs at or below `local_threshold` edges take a driver-local exact
-    BFS instead: the distributed loop costs ~8 Spark jobs per round
-    (frontier join, fused dedup shuffle, checkpoint materializations) —
-    pure fixed overhead when the whole graph fits in one pair of driver
-    lists. Same cutover reasoning as broadcast-vs-shuffle join: below the
-    threshold the data movement IS the cost. The fixture graphs (tens of
-    edges) go from ~10 s to milliseconds; any real corpus is far above
-    the threshold and unaffected.
+    BFS instead: the distributed loop costs ~6 Spark jobs per round before
+    `max_d` (the fused dedup shuffle and its lineage cut, the new-pair
+    count, the `seen` cut; measured on local[4] with AQE) — pure fixed
+    overhead when the whole graph fits in one pair of driver lists. Same
+    cutover reasoning as broadcast-vs-shuffle join: below the threshold
+    the data movement IS the cost. The fixture graphs (tens of edges) go
+    from ~10 s to milliseconds; any real corpus is far above the
+    threshold and unaffected.
     """
-    spark = edges.sparkSession
     n_edges = edges.limit(local_threshold + 1).count()
     if n_edges <= local_threshold:
         rows = edges.collect()
         return _local_pairs_by_distance([(r[0], r[1]) for r in rows], max_d)
     edges = edges.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
-
-    d1 = canonical_pairs(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    seen = d1
-    frontier = d1.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
-        d1.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    counts: list[tuple[int, int]] = []
-    total = d1.count()
-    if total == 0:
-        edges.unpersist()
-        return counts
-    counts.append((1, total))
-
-    # unpersist of a round's structures must wait until the NEXT round's
-    # count has materialized `next_seen`/`next_frontier` (they read the
-    # previous round's persisted blocks; releasing earlier forces a full
-    # recompute of the round)
-    pending_release: list[DataFrame] = []
-    for d in range(2, max_d + 1):
-        if d == 2:
-            # Wedge-centered candidates for the first extension round
-            # (r13 optimization, guide §2.3 — shuffle fewer bytes): at
-            # d=2 the frontier IS the (symmetric, distinct) edge set, so
-            # a distance-2 candidate is exactly an unordered pair of
-            # distinct neighbors of a common center. The generic
-            # frontier-extension join below emits every such pair TWICE
-            # (once per traversal direction: (a,b)⋈(b,c) and
-            # (c,b)⋈(b,a) both canonicalize to {a,c}); the self-join on
-            # the center with a strict dst< dst order emits each pair
-            # ONCE — half the candidate rows into the fused dedup
-            # shuffle (measured 25.2M -> 12.6M at sf0.1, identical
-            # result set). Both join sides are the src-partitioned
-            # persisted edge cache, so the join itself adds NO exchange.
-            e2 = edges.select(
-                F.col("src").alias("c_src"), F.col("dst").alias("c_dst")
-            )
-            cand = edges.join(
-                e2,
-                (edges["src"] == e2["c_src"]) & (edges["dst"] < e2["c_dst"]),
-            ).select(F.col("dst").alias("a"), F.col("c_dst").alias("b"))
-        else:
-            fr = frontier.select(
-                F.col("src").alias("f_src"), F.col("dst").alias("f_dst")
-            )
-            cand = (
-                fr.join(edges, fr["f_dst"] == edges["src"], "inner")
-                .select(
-                    F.least("f_src", "dst").alias("a"),
-                    F.greatest("f_src", "dst").alias("b"),
-                )
-                .filter(F.col("a") != F.col("b"))
-            )
-        # dedup + seen-subtraction fused into ONE shuffle: tag candidates 0
-        # and seen pairs 1, group once, keep groups with no seen member —
-        # equivalent to distinct() followed by a left_anti join but a full
-        # shuffle pass cheaper on the (large) candidate set
-        new_pairs = (
-            cand.select("a", "b", F.lit(0).alias("_seen"))
-            .unionByName(seen.select("a", "b", F.lit(1).alias("_seen")))
-            .groupBy("a", "b")
-            .agg(F.max("_seen").alias("_seen"))
-            .filter(F.col("_seen") == 0)
-            .select("a", "b")
+    try:
+        seen = edges.filter(F.col("src") < F.col("dst")).select(
+            F.col("src").alias("a"), F.col("dst").alias("b")
         )
-        if d < max_d:
-            # persisted because the next round unions it into `seen`; at the
-            # final round the count below is the only consumer — skipping the
-            # persist avoids serializing the full pair set once more
-            new_pairs = new_pairs.persist(StorageLevel.MEMORY_AND_DISK)
-        n_new = new_pairs.count()
-        for df in pending_release:
-            df.unpersist()
-        pending_release = []
+        n_new = seen.count()
         if n_new == 0:
-            new_pairs.unpersist()
-            break
-
-        next_seen = seen.unionByName(new_pairs)
-        next_frontier = new_pairs.select(
-            F.col("a").alias("src"), F.col("b").alias("dst")
-        ).unionByName(new_pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-
-        if d % checkpoint_every == 0:
-            # truncate lineage: each round unions onto the last, and without
-            # this the d-th count recomputes all prior rounds (the
-            # reference's unbounded-lineage flaw, SURVEY.md §4.3)
-            next_seen = next_seen.transform(cut_lineage)
-            next_frontier = next_frontier.transform(cut_lineage)
-        else:
-            next_seen = next_seen.persist(StorageLevel.MEMORY_AND_DISK)
-            next_frontier = next_frontier.persist(StorageLevel.MEMORY_AND_DISK)
-
-        pending_release = [seen, frontier, new_pairs]
-        seen, frontier = next_seen, next_frontier
-        counts.append((d, counts[-1][1] + n_new))
-
-    for df in [edges, seen, frontier, d1, *pending_release]:
-        df.unpersist()
-    return counts
+            return []
+        counts = [(1, n_new)]
+        for d in range(2, max_d + 1):
+            if d == 2:
+                # Wedge-centered candidates, to shuffle fewer bytes: at d=2
+                # the frontier IS the edge set, so a distance-2 candidate is
+                # an unordered pair of distinct neighbors of a common center.
+                # The self-join on the center with a strict dst < dst order
+                # emits each such pair ONCE, where the generic frontier join
+                # below emits it twice (once per traversal direction) — half
+                # the candidate rows into the dedup shuffle (measured 25.2M
+                # -> 12.6M at sf0.1). Both sides are the src-partitioned
+                # persisted edges, so the join adds NO exchange.
+                e2 = edges.select(
+                    F.col("src").alias("c_src"), F.col("dst").alias("c_dst")
+                )
+                cand = edges.join(
+                    e2,
+                    (edges["src"] == e2["c_src"]) & (edges["dst"] < e2["c_dst"]),
+                ).select(F.col("dst").alias("a"), F.col("c_dst").alias("b"))
+            else:
+                fr = frontier.select(
+                    F.col("src").alias("f_src"), F.col("dst").alias("f_dst")
+                )
+                cand = (
+                    fr.join(edges, fr["f_dst"] == edges["src"], "inner")
+                    .select(
+                        F.least("f_src", "dst").alias("a"),
+                        F.greatest("f_src", "dst").alias("b"),
+                    )
+                    .filter(F.col("a") != F.col("b"))
+                )
+            # dedup + seen-subtraction fused into ONE shuffle: tag candidates
+            # 0 and seen pairs 1, group once, keep groups with no seen member
+            # — equivalent to distinct() followed by a left_anti join but a
+            # full shuffle pass cheaper on the (large) candidate set
+            new_pairs = (
+                cand.select("a", "b", F.lit(0).alias("_seen"))
+                .unionByName(seen.select("a", "b", F.lit(1).alias("_seen")))
+                .groupBy("a", "b")
+                .agg(F.max("_seen").alias("_seen"))
+                .filter(F.col("_seen") == 0)
+                .select("a", "b")
+            )
+            if d < max_d:
+                new_pairs = new_pairs.transform(cut_lineage)
+            n_new = new_pairs.count()
+            if n_new == 0:
+                break
+            counts.append((d, counts[-1][1] + n_new))
+            if d == max_d:
+                break
+            seen = seen.unionByName(new_pairs).transform(cut_lineage)
+            frontier = new_pairs.select(
+                F.col("a").alias("src"), F.col("b").alias("dst")
+            ).unionByName(
+                new_pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+            )
+        return counts
+    finally:
+        edges.unpersist()
 
 
 def hop_plot(
@@ -349,9 +325,10 @@ def hop_plot(
     """G8/G9: per-distance hop-plot rows (d, g(d), percent_of_total).
 
     `total_pairs`: the denominator. The reference reads it precomputed from
-    nodepairs.csv (Application.scala:26-32); when absent we use the spec's
-    own definition — connected pairs at d=20 (docs/PA1.pdf p.3) — by
-    running the BFS to convergence first.
+    nodepairs.csv (Application.scala:26-32); when absent it is the
+    connected-pair count at the last BFS level of this same run — the
+    spec's d=20 definition (docs/PA1.pdf p.3) at the default `max_d`, or
+    the pair count at convergence if that comes first.
 
     `strict_stop=True` reproduces the reference's emission rule
     (Analytics.scala:176-214): d=1 and d=2 always recorded; d>=3 recorded
@@ -359,12 +336,21 @@ def hop_plot(
     appearing, and d <= 20.
     """
     counts = connected_pairs_by_distance(edges, max_d=max_d)
+    return _hop_plot_rows(counts, total_pairs, strict_stop)
+
+
+def _hop_plot_rows(
+    counts: list[tuple[int, float]], total_pairs: int | None, strict_stop: bool
+) -> list[HopPlotRow]:
+    """[(d, cumulative pairs)] -> hop-plot rows over `total_pairs` (default:
+    the last count), cut by the strict stop rule when asked."""
     if not counts:
         return []
-    if total_pairs is None:
-        total_pairs = counts[-1][1]
-
-    rows = [HopPlotRow(d, g, g * 1.0 / total_pairs) for d, g in counts]
+    total = total_pairs if total_pairs is not None else counts[-1][1]
+    rows = [
+        HopPlotRow(d, int(round(g)), g / total if total else 0.0)
+        for d, g in counts
+    ]
     return _apply_strict_stop(rows) if strict_stop else rows
 
 
@@ -382,6 +368,15 @@ def _apply_strict_stop(rows: list[HopPlotRow]) -> list[HopPlotRow]:
         if row.d >= 2 and row.percent > 0.90:
             break
     return out
+
+
+def _hop_plot_frame(spark, rows: list[HopPlotRow]) -> DataFrame:
+    """Hop-plot rows in the reference's output schema (d, `g(d)`,
+    percent_of_total) — S7 local-collection source."""
+    from .. import schemas
+
+    data = [(r.d, r.pairs, r.percent) for r in rows]
+    return spark.createDataFrame(data, schema=schemas.HOP_PLOT)
 
 
 def effective_diameter(rows: list[HopPlotRow]) -> float | None:
@@ -402,13 +397,9 @@ def hop_plot_df(
     max_d: int = 20,
     strict_stop: bool = True,
 ) -> DataFrame:
-    """Hop-plot as a DataFrame with the reference's output schema
-    (d, `g(d)`, percent_of_total) — S7 local-collection source."""
-    from .. import schemas
-
+    """Exact hop-plot as a DataFrame with the reference's output schema."""
     rows = hop_plot(edges, total_pairs=total_pairs, max_d=max_d, strict_stop=strict_stop)
-    data = [(r.d, r.pairs, r.percent) for r in rows]
-    return spark.createDataFrame(data, schema=schemas.HOP_PLOT)
+    return _hop_plot_frame(spark, rows)
 
 
 def approx_hop_plot_df(
@@ -424,22 +415,10 @@ def approx_hop_plot_df(
     state instead of O(connected pairs), the path that still runs when
     the pair set no longer fits anywhere (100 TB graphs). Estimates carry
     ~1 % relative error at p=6 on sf0.1 (asserted in tests)."""
-    from .. import schemas
     from ..functions.sketches import hyperball_hopplot
 
     counts = hyperball_hopplot(edges, p=p, max_d=max_d)
-    if not counts:
-        return spark.createDataFrame([], schema=schemas.HOP_PLOT)
-    total = float(total_pairs) if total_pairs is not None else counts[-1][1]
-    rows = [
-        HopPlotRow(d, int(round(g)), g / total if total else 0.0)
-        for d, g in counts
-    ]
-    if strict_stop:
-        rows = _apply_strict_stop(rows)
-    return spark.createDataFrame(
-        [(r.d, r.pairs, r.percent) for r in rows], schema=schemas.HOP_PLOT
-    )
+    return _hop_plot_frame(spark, _hop_plot_rows(counts, total_pairs, strict_stop))
 
 
 def connected_components(

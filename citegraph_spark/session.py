@@ -18,6 +18,17 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory() -> str:
+    """`spark.driver.memory` default: half the host's physical memory, so
+    the JVM heap can never outgrow the machine and get the driver
+    OOM-killed. SPARK_GRAFT_DRIVER_MEM overrides it."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{physical // 2 // 2**20}m"
+
+
 def get_spark(
     app_name: str = "citegraph_spark",
     master: str | None = None,
@@ -43,7 +54,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
         # the events table stores TIMESTAMP(NANOS) which the vectorized

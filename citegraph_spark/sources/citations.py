@@ -24,17 +24,19 @@ from pyspark.sql import functions as F
 from .. import schemas
 
 
-def _non_comment_lines(spark: SparkSession, path: str) -> DataFrame:
-    lines = spark.read.text(path)
-    return lines.filter(
+def _line_tokens(lines: DataFrame) -> DataFrame:
+    """`(value STRING)` text lines -> `(t ARRAY<STRING>)` whitespace tokens,
+    with `#` comment lines and blank lines dropped (S4, S5) — the one
+    line filter both loaders share."""
+    keep = lines.filter(
         (~F.col("value").contains("#")) & (F.trim(F.col("value")) != "")
     )
+    return keep.select(F.split(F.trim(F.col("value")), r"\s+").alias("t"))
 
 
 def load_citations(spark: SparkSession, path: str) -> DataFrame:
     """`(from INT, to INT)` directed edge list from whitespace text."""
-    lines = _non_comment_lines(spark, path)
-    toks = lines.select(F.split(F.trim(F.col("value")), r"\s+").alias("t"))
+    toks = _line_tokens(spark.read.text(path))
     # try_cast: ANSI mode (Spark 4 default) makes plain cast THROW on a
     # malformed token; try_cast -> null -> na.drop reproduces the
     # reference's drop-bad-rows behavior (DataFrameLoader.scala:37)
@@ -65,10 +67,7 @@ def published_dates_from_lines(lines: DataFrame) -> DataFrame:
     min-year dedupe. Factored out (round-12 mutation audit, mutants
     M02/M03) so the `loader_normalize_ids` oracle exercises THIS code
     instead of an inline copy — loader mutations are now gate-visible."""
-    keep = lines.filter(
-        (~F.col("value").contains("#")) & (F.trim(F.col("value")) != "")
-    )
-    toks = keep.select(F.split(F.trim(F.col("value")), r"\s+").alias("t"))
+    toks = _line_tokens(lines)
     df = toks.select(
         normalize_paper_id(F.trim(F.element_at("t", 1))).alias("id"),
         F.substring(F.trim(F.element_at("t", 2)), 1, 4).try_cast("int").alias("year"),
@@ -85,5 +84,9 @@ def load_published_dates(spark: SparkSession, path: str) -> DataFrame:
 def load_nodepairs(spark: SparkSession, path: str) -> DataFrame:
     """Precomputed `(year, total_pairs)` totals (reference
     Application.scala:26-32 collects these to the driver; we keep a
-    DataFrame and collect only the tiny per-year dict at the call site)."""
-    return spark.read.csv(path, schema=schemas.NODEPAIRS, comment="#")
+    DataFrame and collect only the tiny per-year dict at the call site).
+    FAILFAST: a malformed row raises instead of becoming nulls, since the
+    totals are the diameter denominator."""
+    return spark.read.csv(
+        path, schema=schemas.NODEPAIRS, comment="#", mode="FAILFAST"
+    )

@@ -7,6 +7,8 @@ import csv
 import glob
 import tempfile
 
+import pytest
+
 from citegraph_spark.cli import main
 
 CITS = "# comment\n2 1\n3 1\n4 2\n5 4\n6 5\n"
@@ -51,3 +53,45 @@ def test_cli_diameter_exact_vs_approx(spark):
         assert all(b >= a for a, b in zip(pcts, pcts[1:]))
         for e, a in zip(exact, approx):
             assert abs(int(a["g(d)"]) - int(e["g(d)"])) / int(e["g(d)"]) < 0.35
+
+
+# the 1994 snapshot is the path 3-1-2-4-5-6: 5, 9, 12, 14, 15 pairs at d<=1..5
+PATH_1994 = [(1, 5), (2, 9), (3, 12), (4, 14), (5, 15)]
+
+
+def _hop_rows(d: str, year: int) -> list[tuple[int, int, float]]:
+    return [
+        (int(r["d"]), int(r["g(d)"]), float(r["percent_of_total"]))
+        for r in _read_rows(f"{d}/diameter_{year}/part*.csv")
+    ]
+
+
+@pytest.mark.parametrize(
+    "nodepairs, levels, total",
+    [(None, 4, 15), ("# year,total_pairs\n1994,100\n", 5, 100)],
+    ids=["missing", "present"],
+)
+def test_cli_diameter_denominator(spark, nodepairs, levels, total):
+    """percent_of_total is over nodepairs.csv's total when the file is
+    present, else over the BFS's own pair count (15). Over 15, 12/15 <=
+    0.90 lets d=4 in and 14/15 > 0.90 stops there; over 100 the strict
+    stop never fires."""
+    with tempfile.TemporaryDirectory() as d:
+        _write_inputs(d)
+        if nodepairs is not None:
+            with open(f"{d}/nodepairs.csv", "w") as f:
+                f.write(nodepairs)
+        assert main(["diameter", d, f"{d}/out"]) == 0
+        got = _hop_rows(f"{d}/out", 1994)
+        assert [(r[0], r[1]) for r in got] == PATH_1994[:levels]
+        for _, g, pct in got:
+            assert pct == pytest.approx(g / total)
+
+
+def test_cli_diameter_malformed_nodepairs_raises(spark):
+    with tempfile.TemporaryDirectory() as d:
+        _write_inputs(d)
+        with open(f"{d}/nodepairs.csv", "w") as f:
+            f.write("1994,not-a-number\n")
+        with pytest.raises(Exception, match="(?i)malformed"):
+            main(["diameter", d, f"{d}/out"])

@@ -136,20 +136,33 @@ def test_connected_components_hand_graph(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
+@pytest.mark.parametrize("reliable", [False, True], ids=["local", "reliable"])
+@pytest.mark.parametrize("max_d", [2, 3, 4, 20])
 @pytest.mark.parametrize("year", [1997, 1998])
-def test_distributed_bfs_matches_local_exact(spark, year):
+def test_distributed_bfs_matches_local_exact(spark, tmp_path, year, max_d, reliable):
     """Force the DISTRIBUTED frontier-BFS path (local_threshold=0) and
     pin it to the driver-local exact BFS on the same fixture snapshot —
-    covers the wedge-centered d=2 candidate round (r13 optimization),
-    which the fixture entries otherwise bypass via the local cutover."""
+    covers the wedge-centered d=2 candidate round, which the fixture
+    entries otherwise bypass via the local cutover. `max_d` stops the
+    loop after 1, 2 or 3 extension rounds (2, 3, 4) and past convergence
+    (20); `reliable` routes every lineage cut through DFS-backed
+    checkpoints."""
+    from citegraph_spark.lineage import RELIABLE_FLAG
     from citegraph_spark.operators.graph import (
         _local_pairs_by_distance,
         connected_pairs_by_distance,
     )
 
     edges = snapshot_edges(fixture_citations(spark), fixture_published(spark), year)
-    dist = connected_pairs_by_distance(edges, max_d=20, local_threshold=0)
+    if reliable:
+        spark.sparkContext.setCheckpointDir(str(tmp_path))
+        spark.conf.set(RELIABLE_FLAG, "true")
+    try:
+        dist = connected_pairs_by_distance(edges, max_d=max_d, local_threshold=0)
+    finally:
+        spark.conf.unset(RELIABLE_FLAG)
     local = _local_pairs_by_distance(
-        [(r[0], r[1]) for r in edges.collect()], max_d=20
+        [(r[0], r[1]) for r in edges.collect()], max_d=max_d
     )
-    assert dist == local == EXPECTED_HOPPLOT_FULL[year]
+    expected = [(d, g) for d, g in EXPECTED_HOPPLOT_FULL[year] if d <= max_d]
+    assert dist == local == expected

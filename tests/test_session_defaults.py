@@ -101,3 +101,17 @@ def test_ship_package_once_per_application(spark):
     assert spark.sparkContext.applicationId in S._SHIPPED_APP_IDS
     for p in added:
         assert os.path.exists(p)
+
+
+def test_driver_memory_default_fits_physical_memory(spark, monkeypatch):
+    """Without SPARK_GRAFT_DRIVER_MEM the driver heap is derived from the
+    host (half its physical memory), so the JVM can never be sized past
+    what the kernel can back; the variable still overrides it."""
+    from citegraph_spark.session import default_driver_memory
+
+    to_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert 0 < to_bytes(default_driver_memory()) <= physical
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert default_driver_memory() == "3g"
