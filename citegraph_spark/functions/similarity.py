@@ -36,7 +36,7 @@ TOPK_SCHEMA = "vec_id bigint, neighbor_id bigint, cosine double, rank int"
 
 
 #: Max corpus matrix size the brute-force path may collect+broadcast.
-#: Mirrors operators/graph.py pagerank's broadcast_budget_bytes pattern:
+#: Mirrors operators/graph.py's _BROADCAST_BUDGET_BYTES pattern:
 #: the driver-collect shortcut must FAIL FAST above the budget instead of
 #: silently OOMing the driver at scale.
 BROADCAST_BUDGET_BYTES = 256 << 20

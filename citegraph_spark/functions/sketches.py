@@ -56,9 +56,9 @@ import math
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..lineage import cut_lineage
+from ..operators import graph
 
 
 def _alpha(m: int) -> float:
@@ -252,7 +252,6 @@ def hyperball_hopplot(
     p: int = 6,
     max_d: int = 20,
     rel_tol: float = 1e-3,
-    broadcast_budget_bytes: int = 256 << 20,
 ) -> list[tuple[int, float]]:
     """Approximate hop-plot: [(d, estimated #unordered connected pairs at
     dist <= d)] until the neighborhood function stabilizes (relative
@@ -263,10 +262,14 @@ def hyperball_hopplot(
     concentrate tighter, and for balls far smaller than m the
     linear-counting regime is near-exact.
 
-    Counters fitting `broadcast_budget_bytes` (|V| * (m + row overhead))
+    Counters fitting the engine's broadcast budget
+    (`operators.graph._BROADCAST_BUDGET_BYTES`, |V| * (m + row overhead))
     are broadcast each round — with the self-loop-augmented edge table
     pre-partitioned by src, a round is then a single zero-shuffle job.
-    Larger vertex sets fall back to a shuffled join transparently.
+    Larger vertex sets fall back to a shuffled join transparently. The
+    edge table is built by `operators.graph._message_table`; the loop is
+    its own (not `_run_rounds`) because every round is cut so its
+    estimate can be observed.
     """
     spark = edges.sparkSession
     m = 1 << p
@@ -281,7 +284,6 @@ def hyperball_hopplot(
     # serializing the (interpreted) loop stages.
     codegen_before = spark.conf.get("spark.sql.codegen.wholeStage", "true")
     coalesce_before = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try:
@@ -289,28 +291,23 @@ def hyperball_hopplot(
             edges.select(F.col("src").alias("node")), p=p
         ).transform(cut_lineage)
         n = counters.count()
-        use_broadcast = n * (m + 32) <= broadcast_budget_bytes
+        use_broadcast = n * (m + 32) <= graph._BROADCAST_BUDGET_BYTES
         # self-loops make absorb a pure join+agg (each node's own ball
         # rides the (v, v) message) — no union with the previous
         # counters, so the broadcast path needs no exchange at all.
         # Loops come from the checkpointed counters (already distinct),
         # so the upstream edge lineage is scanned once here, not twice.
-        edges_aug = (
+        # Broadcast mode partitions by the AGG key `src` so a round is
+        # join + agg with zero exchange; the fallback partitions by the
+        # JOIN key `dst` and hash-builds on the counter side, so the only
+        # per-round exchanges are the counter table and the map-side-
+        # combined aggregate — never the edges.
+        edges_aug = graph._message_table(
             edges.unionByName(
                 counters.select(F.col("node").alias("src"), F.col("node").alias("dst"))
-            )
-            # persist, NOT localCheckpoint (a PySpark checkpoint scans
-            # back with UnknownPartitioning and every round re-shuffles
-            # this O(edges) table — see operators/graph.py pagerank).
-            # Broadcast mode partitions by the AGG key `src` so a round
-            # is join + agg with zero exchange; the fallback partitions
-            # by the JOIN key `dst` and hash-builds on the counter side,
-            # so the only per-round exchanges are the counter table and
-            # the map-side-combined aggregate — never the edges.
-            .repartition(n_shuffle, "src" if use_broadcast else "dst")
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            ),
+            "src" if use_broadcast else "dst",
         )
-        edges_aug.count()  # materialize once
 
         out: list[tuple[int, float]] = []
         prev_total = float(n)  # N(0): every node reaches itself

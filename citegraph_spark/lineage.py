@@ -189,9 +189,10 @@ def resumable_rounds(
                                       by the scan-scramble boards)
     snapshot_every                    snapshot cadence; rounds between
                                       snapshots are recomputed on resume
-                                      (cost/durability trade — same knob
-                                      shape as checkpoint_every on the
-                                      iterative operators)
+                                      (cost/durability trade — the
+                                      iterative operators fix theirs,
+                                      e.g. every 3rd round in
+                                      operators/graph.py `_run_rounds`)
     on_round(k)                       optional progress hook (the kill
                                       probe keys its SIGKILL off it)
 

@@ -24,10 +24,21 @@ and persisted — the loop's only persisted state — so every round's join
 reuses the same partitioning; with AQE the frontier side coalesces as it
 shrinks. For approximate hop-plots at extreme scale, see
 `functions.sketches.hyperball` (HyperLogLog-based).
+
+The fixed-round message-passing operators (pagerank, hits, sssp_bounded,
+multi_source_bfs; HyperBall's table) share two helpers: `_message_table`
+builds the static O(edges) message table once — partitioned, persisted,
+materialized — and `_run_rounds` runs the rounds against it. While the
+per-round state fits `_BROADCAST_BUDGET_BYTES` it is broadcast and a
+round is join + aggregate with zero shuffle; past the budget (1e9-node
+graphs) the rounds fall back to a shuffled hash join that moves only the
+state and the map-side-combined aggregate, never the message table.
 """
 
 from __future__ import annotations
 
+import contextlib
+import gc
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
@@ -36,8 +47,10 @@ from pyspark.storagelevel import StorageLevel
 
 from ..lineage import cut_lineage
 
-
-import contextlib
+#: Largest per-round state (rows x the operator's bytes-per-row estimate)
+#: the fixed-round loops broadcast; larger state takes the shuffled
+#: fallback (see `_run_rounds`).
+_BROADCAST_BUDGET_BYTES = 256 << 20
 
 
 @contextlib.contextmanager
@@ -59,6 +72,81 @@ def _aqe_off_for_rounds(spark, active: bool):
         yield
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", before)
+
+
+def _message_table(df: DataFrame, key: str) -> DataFrame:
+    """The static table a round loop joins against every round: `df`
+    hash-partitioned by `key` into `spark.sql.shuffle.partitions`
+    partitions, persisted and materialized once. Whoever builds it
+    releases it (`unpersist`) in a `finally`.
+
+    persist, NOT localCheckpoint: a PySpark localCheckpoint scans back as
+    ExistingRDD with UnknownPartitioning, so every round would silently
+    re-shuffle the static O(edges) table — the cached InMemoryTableScan
+    keeps hashpartitioning(key, n) visible to EnsureRequirements and the
+    per-round plan starts from the already-partitioned cache (verified in
+    .explain: no Exchange above the InMemoryTableScan in either join
+    mode).
+    """
+    n_shuffle = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    table = df.repartition(n_shuffle, key).persist(StorageLevel.MEMORY_AND_DISK)
+    table.count()  # materialize once
+    return table
+
+
+def _run_rounds(state: DataFrame, rounds: int, step, use_broadcast: bool = True) -> DataFrame:
+    """Run `rounds` steps of a fixed-round message-passing loop and
+    return the last state: `state = step(build)`, where `build` is the
+    current state as the round join's build side. `step` joins it
+    against a `_message_table` and aggregates by the receiving node.
+
+    Join modes — the caller picks one from its state size against
+    `_BROADCAST_BUDGET_BYTES` and partitions the message table to match:
+
+    - broadcast (`F.broadcast(state)`): the message table is partitioned
+      by the AGGREGATE key (the receiving node), so the broadcast join's
+      output already carries the group-by's partitioning and a whole
+      round runs with ZERO shuffle. AQE is off for the loop
+      (`_aqe_off_for_rounds`) — there is no exchange for it to adapt.
+    - shuffled fallback (`state.hint("shuffle_hash")`): the message table
+      is partitioned by the JOIN key (the sending node). The state comes
+      out of the previous round's group-by hash-partitioned on node with
+      the same partition count, so both join sides already satisfy the
+      join's distribution and the only per-round exchanges are the
+      O(nodes) state and the map-side-combined aggregate — never the
+      O(edges) messages, and never the per-round SORT a merge join would
+      force on them. Without this the static table would re-shuffle
+      EVERY round — the round-7 100x rehearsal measured that as the
+      dominant cost of the fallback (15.6 GB/10 rounds); join-key
+      partitioning cut the forced-fallback A/B's per-round shuffle by
+      ~2.9x and wall by ~1.5x at 6M edges.
+
+    Lineage: every 3rd round and the last round are cut with
+    `cut_lineage`, followed by a Python `gc.collect()` that releases the
+    superseded checkpoint blocks promptly (Py4J refs otherwise pin them
+    JVM-side). Only those rounds: a full GC costs ~50 ms and the
+    intermediate rounds hold no materialized state (r13, guide §1.2 —
+    fixed per-round driver costs). The last round is always cut, so its
+    state no longer depends on the message table and the caller may
+    release the table.
+    """
+    with _aqe_off_for_rounds(state.sparkSession, use_broadcast):
+        for it in range(1, rounds + 1):
+            build = F.broadcast(state) if use_broadcast else state.hint("shuffle_hash")
+            state = step(build)
+            if it % 3 == 0 or it == rounds:
+                state = state.transform(cut_lineage)
+                gc.collect()
+    return state
+
+
+def _node_ids(edges: DataFrame) -> DataFrame:
+    """Distinct node ids (`node`) of a (src, dst) edge list."""
+    return (
+        edges.select(F.col("src").alias("node"))
+        .unionByName(edges.select(F.col("dst").alias("node")))
+        .distinct()
+    )
 
 
 # ---------------------------------------------------------------- density
@@ -421,11 +509,7 @@ def approx_hop_plot_df(
     return _hop_plot_frame(spark, _hop_plot_rows(counts, total_pairs, strict_stop))
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iter: int = 25,
-    checkpoint_every: int = 3,
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """Connected components by hash-min label propagation: every node
     starts labeled with its own id; each round a node takes the min of
     its label and its neighbors' labels; converged when no label changes.
@@ -435,61 +519,53 @@ def connected_components(
     connected_components_star (large/small-star, O(log) rounds) below;
     per round: one equi join
     (messages) + one min-aggregate with map-side combine, lineage
-    truncated via localCheckpoint. All DataFrame ops — no RDDs.
+    truncated via localCheckpoint every 3rd round. All DataFrame ops — no
+    RDDs.
     """
-    n_shuffle = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
     fwd = edges.select(F.col("src").alias("node"), F.col("dst").alias("nbr"))
     rev = edges.select(F.col("dst").alias("node"), F.col("src").alias("nbr"))
     # static adjacency partitioned once by the per-round join key and
-    # cached (persist keeps the hashpartitioning visible — see
-    # pagerank); labels hash-build into it so rounds move only the
-    # O(nodes) label table + the combined min-aggregate, never the
-    # O(edges) adjacency
-    adj = (
-        fwd.unionByName(rev)
-        .distinct()
-        .repartition(n_shuffle, "nbr")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    adj.count()  # materialize once
+    # cached (`_message_table`); labels hash-build into it so rounds move
+    # only the O(nodes) label table + the combined min-aggregate, never
+    # the O(edges) adjacency
+    adj = _message_table(fwd.unionByName(rev).distinct(), "nbr")
 
-    labels = (
-        adj.select("node").distinct().select("node", F.col("node").alias("component"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        labels = (
+            adj.select("node").distinct().select("node", F.col("node").alias("component"))
+        ).persist(StorageLevel.MEMORY_AND_DISK)
 
-    for it in range(1, max_iter + 1):
-        msgs = (
-            adj.alias("a")
-            .join(
-                labels.hint("shuffle_hash").alias("l"),
-                F.col("a.nbr") == F.col("l.node"),
-                "inner",
+        for it in range(1, max_iter + 1):
+            msgs = (
+                adj.alias("a")
+                .join(
+                    labels.hint("shuffle_hash").alias("l"),
+                    F.col("a.nbr") == F.col("l.node"),
+                    "inner",
+                )
+                .select(F.col("a.node").alias("node"), F.col("l.component").alias("component"))
             )
-            .select(F.col("a.node").alias("node"), F.col("l.component").alias("component"))
-        )
-        new_labels = (
-            labels.unionByName(msgs)
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
-        )
-        if it % checkpoint_every == 0:
-            new_labels = new_labels.transform(cut_lineage)
-        else:
-            new_labels = new_labels.persist(StorageLevel.MEMORY_AND_DISK)
-        n_changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if n_changed == 0:
-            break
-
-    adj.unpersist()
+            new_labels = (
+                labels.unionByName(msgs)
+                .groupBy("node")
+                .agg(F.min("component").alias("component"))
+            )
+            if it % 3 == 0:
+                new_labels = new_labels.transform(cut_lineage)
+            else:
+                new_labels = new_labels.persist(StorageLevel.MEMORY_AND_DISK)
+            n_changed = (
+                new_labels.alias("n")
+                .join(labels.alias("o"), "node")
+                .filter(F.col("n.component") != F.col("o.component"))
+                .count()
+            )
+            labels.unpersist()
+            labels = new_labels
+            if n_changed == 0:
+                break
+    finally:
+        adj.unpersist()
     return labels
 
 
@@ -598,8 +674,6 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 3,
-    broadcast_budget_bytes: int = 256 << 20,
     seeds: list[int] | None = None,
 ) -> DataFrame:
     """PageRank on a DIRECTED edge list (src, dst), fixed iteration count:
@@ -616,48 +690,19 @@ def pagerank(
     (random walk with restart). Identical round shape and cost; only the
     teleport expression changes.
 
-    Same mechanics as the HyperBall loop (functions/sketches.py),
-    mirrored for the src->dst message direction: the edge table is
-    augmented once with ZERO-WEIGHT self-loops so every node receives at
-    least one message per round (a round is then a pure join +
-    groupBy-sum, no left join against the previous ranks), and it is
-    pre-partitioned ONCE for whichever join strategy the node count
-    selects:
-
-    - rank table under `broadcast_budget_bytes`: partition e_aug by DST
-      — with the (16-byte-per-node) rank table BROADCAST into the join,
-      the join output already carries the group-by key's partitioning,
-      so a whole round runs with ZERO shuffle.
-    - past the budget (1e9-node graphs), the join must shuffle — so
-      partition e_aug by SRC instead: the per-round rank table comes
-      out of its groupBy hash-partitioned on node with the same
-      partition count, both join sides already satisfy the join's
-      distribution, and the only per-round exchange left is the
-      map-side-combined message aggregate (O(distinct dst) per
-      partition, not O(edges)). Without this the static 100TB edge
-      table would re-shuffle on src EVERY iteration — the round-7 100x
-      rehearsal measured that as the dominant cost of the fallback
-      (15.6 GB/10 rounds); src-partitioning cut the forced-fallback
-      A/B's per-round shuffle by ~2.9x and wall by ~1.5x at 6M edges.
-
-    Round state is localCheckpoint-ed (lineage truncation) with prompt
-    Py4J release.
+    The edge table is augmented once with ZERO-WEIGHT self-loops so every
+    node receives at least one message per round (a round is then a pure
+    join + groupBy-sum, no left join against the previous ranks) and
+    built with `_message_table`; the rounds run under `_run_rounds`
+    (join modes, partitioning and lineage cuts are documented there),
+    with the rank table broadcast at ~48 bytes/node.
     """
-    import gc
-
-    spark = edges.sparkSession
     edges = edges.transform(cut_lineage)
     outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .transform(cut_lineage)
-    )
+    nodes = _node_ids(edges).transform(cut_lineage)
     n = nodes.count()
-    use_broadcast = n * 48 <= broadcast_budget_bytes
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    e_aug = (
+    use_broadcast = n * 48 <= _BROADCAST_BUDGET_BYTES
+    e_aug = _message_table(
         edges.join(outdeg, "src")
         .select("src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w"))
         .unionByName(
@@ -666,18 +711,9 @@ def pagerank(
                 F.col("node").alias("dst"),
                 F.lit(0.0).alias("w"),
             )
-        )
-        .repartition(n_shuffle, "dst" if use_broadcast else "src")
-        # persist, NOT localCheckpoint: a PySpark localCheckpoint scans
-        # back as ExistingRDD with UnknownPartitioning, so every round
-        # would silently re-shuffle the static O(edges) table — the
-        # cached InMemoryTableScan keeps hashpartitioning(key, n) visible
-        # to EnsureRequirements and the per-round plan starts from the
-        # already-partitioned cache (verified in .explain: no Exchange
-        # above the InMemoryTableScan in either join mode)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ),
+        "dst" if use_broadcast else "src",
     )
-    e_aug.count()  # materialize once
 
     if seeds is None:
         init_rank = F.lit(1.0 / n)
@@ -689,40 +725,21 @@ def pagerank(
             F.lit(0.0)
         )
     ranks = nodes.select("node", init_rank.alias("rank")).transform(cut_lineage)
-    with _aqe_off_for_rounds(spark, use_broadcast):
-        for it in range(1, iterations + 1):
-            # fallback build side: SHUFFLE_HASH, not sort-merge — the rank
-            # table is the per-round hash build (its shuffle is O(nodes)),
-            # while the src-partitioned edge table streams with neither a
-            # re-shuffle nor the per-round SORT a merge join would force on
-            # the O(edges) side
-            build = (
-                F.broadcast(ranks) if use_broadcast else ranks.hint("shuffle_hash")
-            )
-            nxt = (
-                e_aug.join(build, e_aug["src"] == build["node"], "inner")
-                .select(
-                    e_aug["dst"].alias("node"),
-                    (F.col("rank") * F.col("w")).alias("c"),
-                )
+    try:
+        return _run_rounds(
+            ranks,
+            iterations,
+            lambda r: (
+                e_aug.join(r, e_aug["src"] == r["node"], "inner")
+                .select(e_aug["dst"].alias("node"), (F.col("rank") * F.col("w")).alias("c"))
                 .groupBy("node")
                 .agg(F.sum("c").alias("_s"))
-                .select(
-                    "node", (teleport + F.lit(damping) * F.col("_s")).alias("rank")
-                )
-            )
-            if it % checkpoint_every == 0 or it == iterations:
-                nxt = nxt.transform(cut_lineage)
-                # release superseded checkpoint blocks promptly — but only
-                # at checkpoint rounds: a Python full GC costs ~50 ms, and
-                # the intermediate rounds hold no materialized state to
-                # release (r13, guide §1.2 — fixed per-round driver costs)
-                gc.collect()
-            ranks = nxt
-    # the final ranks are checkpointed (it == iterations), so they no
-    # longer depend on the cached edge table — release it eagerly
-    e_aug.unpersist()
-    return ranks
+                .select("node", (teleport + F.lit(damping) * F.col("_s")).alias("rank"))
+            ),
+            use_broadcast,
+        )
+    finally:
+        e_aug.unpersist()
 
 
 def k_core(und_edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
@@ -789,11 +806,7 @@ def k_core(und_edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
     )
 
 
-def label_propagation(
-    edges: DataFrame,
-    max_iter: int = 5,
-    checkpoint_every: int = 2,
-) -> DataFrame:
+def label_propagation(edges: DataFrame, max_iter: int = 5) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation: every node
     starts in its own community; each round a node adopts the most
     frequent label among its neighbors and itself (self-vote damps the
@@ -806,65 +819,61 @@ def label_propagation(
     `max(struct(cnt, -label))` — a regular aggregate with map-side
     combine on the same `node` key as the count's first grouping column,
     NOT a row_number window (a window would force a second full sort
-    exchange per round). Lineage is truncated with localCheckpoint.
-    Fixed small `max_iter`: LPA quality saturates in a few rounds and
-    each extra round is a full join over the edge set.
+    exchange per round). Lineage is truncated with localCheckpoint every
+    2nd round. Fixed small `max_iter`: LPA quality saturates in a few
+    rounds and each extra round is a full join over the edge set.
     """
-    n_shuffle = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
     fwd = edges.select(F.col("src").alias("node"), F.col("dst").alias("nbr"))
     rev = edges.select(F.col("dst").alias("node"), F.col("src").alias("nbr"))
     adj = fwd.unionByName(rev).filter(F.col("node") != F.col("nbr")).distinct()
     # partition the static adjacency by the per-round JOIN key and cache
-    # it: with the hashpartitioning visible (persist, not checkpoint —
-    # see pagerank) and the label table as a SHUFFLE_HASH build side,
-    # each round moves only the O(nodes) labels and the map-side-
+    # it (`_message_table`): with the label table as a SHUFFLE_HASH build
+    # side, each round moves only the O(nodes) labels and the map-side-
     # combined vote aggregate — never the O(edges) adjacency, and never
     # the per-round sort a merge join would force on it
-    adj = adj.repartition(n_shuffle, "nbr").persist(StorageLevel.MEMORY_AND_DISK)
-    adj.count()  # materialize once
+    adj = _message_table(adj, "nbr")
 
-    labels = (
-        adj.select("node").distinct().select("node", F.col("node").alias("community"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        labels = (
+            adj.select("node").distinct().select("node", F.col("node").alias("community"))
+        ).persist(StorageLevel.MEMORY_AND_DISK)
 
-    for it in range(1, max_iter + 1):
-        msgs = (
-            adj.alias("a")
-            .join(
-                labels.hint("shuffle_hash").alias("l"),
-                F.col("a.nbr") == F.col("l.node"),
-                "inner",
+        for it in range(1, max_iter + 1):
+            msgs = (
+                adj.alias("a")
+                .join(
+                    labels.hint("shuffle_hash").alias("l"),
+                    F.col("a.nbr") == F.col("l.node"),
+                    "inner",
+                )
+                .select(F.col("a.node").alias("node"), F.col("l.community").alias("community"))
             )
-            .select(F.col("a.node").alias("node"), F.col("l.community").alias("community"))
-        )
-        votes = msgs.unionByName(labels)
-        new_labels = (
-            votes.groupBy("node", "community")
-            .agg(F.count("*").alias("cnt"))
-            .groupBy("node")
-            .agg(
-                F.max(F.struct(F.col("cnt"), (-F.col("community")).alias("neg"))).alias("top")
+            votes = msgs.unionByName(labels)
+            new_labels = (
+                votes.groupBy("node", "community")
+                .agg(F.count("*").alias("cnt"))
+                .groupBy("node")
+                .agg(
+                    F.max(F.struct(F.col("cnt"), (-F.col("community")).alias("neg"))).alias("top")
+                )
+                .select("node", (-F.col("top.neg")).alias("community"))
             )
-            .select("node", (-F.col("top.neg")).alias("community"))
-        )
-        if it % checkpoint_every == 0:
-            new_labels = new_labels.transform(cut_lineage)
-        else:
-            new_labels = new_labels.persist(StorageLevel.MEMORY_AND_DISK)
-        n_changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.community") != F.col("o.community"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if n_changed == 0:
-            break
-
-    adj.unpersist()
+            if it % 2 == 0:
+                new_labels = new_labels.transform(cut_lineage)
+            else:
+                new_labels = new_labels.persist(StorageLevel.MEMORY_AND_DISK)
+            n_changed = (
+                new_labels.alias("n")
+                .join(labels.alias("o"), "node")
+                .filter(F.col("n.community") != F.col("o.community"))
+                .count()
+            )
+            labels.unpersist()
+            labels = new_labels
+            if n_changed == 0:
+                break
+    finally:
+        adj.unpersist()
     return labels
 
 
@@ -1137,12 +1146,7 @@ def strongly_connected_components(
     return cyclic.unionByName(singletons)
 
 
-def hits(
-    edges: DataFrame,
-    iterations: int = 10,
-    checkpoint_every: int = 3,
-    broadcast_budget_bytes: int = 256 << 20,
-) -> DataFrame:
+def hits(edges: DataFrame, iterations: int = 10) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999, "Authoritative sources in
     a hyperlinked environment") on a DIRECTED edge list (src, dst) —
     the citation-network centrality pair: a good authority is cited by
@@ -1158,13 +1162,10 @@ def hits(
     edge u->v is pre-expanded into a forward message (to=v carries h(u))
     and a reverse message (to=u carries a(v)), unioned with zero-weight
     self-messages so every node survives the groupBy. The message table
-    is built once, partitioned for the selected join mode, and CACHED
-    (persist — see `pagerank` for why a checkpoint would lose the
-    partitioning); with the per-node state broadcast (24 bytes/node
-    within `broadcast_budget_bytes`), a round is join + groupBy-sum with
-    ZERO shuffle, and past the budget the shuffled-hash fallback moves
-    only the state + the combined aggregate, never the messages — the
-    same mechanics as `pagerank` above. Scores are left UN-normalized (normalization is a
+    is built once with `_message_table` and the rounds run under
+    `_run_rounds` (join modes, partitioning and lineage cuts are
+    documented there), with the state broadcast at ~24 bytes/node.
+    Scores are left UN-normalized (normalization is a
     scalar that cancels in ranking); callers who need comparable
     magnitudes divide by the max, which keeps the recurrence exactly
     expressible in SQL (the DuckDB oracle replays it with a recursive
@@ -1175,70 +1176,42 @@ def hits(
     values — far inside double range for any graph that fits a cluster.
     Output: (node, hub, auth).
     """
-    import gc
-
-    spark = edges.sparkSession
     edges = edges.transform(cut_lineage)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .transform(cut_lineage)
-    )
+    nodes = _node_ids(edges).transform(cut_lineage)
     n = nodes.count()
-    use_broadcast = n * 24 <= broadcast_budget_bytes
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    use_broadcast = n * 24 <= _BROADCAST_BUDGET_BYTES
     # kind 1: forward (h -> authority of dst); kind 2: reverse (a -> hub
     # of src); kind 0: zero self-message (keeps isolated-direction nodes)
-    msgs = (
+    msgs = _message_table(
         edges.select(F.col("src").alias("frm"), F.col("dst").alias("to"), F.lit(1).alias("kind"))
         .unionByName(
             edges.select(F.col("dst").alias("frm"), F.col("src").alias("to"), F.lit(2).alias("kind"))
         )
         .unionByName(
             nodes.select(F.col("node").alias("frm"), F.col("node").alias("to"), F.lit(0).alias("kind"))
-        )
-        # partition for the selected join mode and PERSIST (a PySpark
-        # localCheckpoint would scan back with UnknownPartitioning and
-        # silently re-shuffle the static message table every round —
-        # see pagerank above): broadcast mode partitions by the agg key
-        # `to` (zero-shuffle rounds), fallback by the join key `frm`
-        # (the O(edges) side streams into a shuffled-hash join without
-        # re-shuffle or sort; only the per-round state + the map-side-
-        # combined aggregate move)
-        .repartition(n_shuffle, "to" if use_broadcast else "frm")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ),
+        "to" if use_broadcast else "frm",
     )
-    msgs.count()  # materialize once
 
     state = nodes.select("node", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth"))
-    with _aqe_off_for_rounds(spark, use_broadcast):
-        for it in range(1, iterations + 1):
-            build = (
-                F.broadcast(state) if use_broadcast else state.hint("shuffle_hash")
-            )
-            nxt = (
-                msgs.join(build, msgs["frm"] == build["node"], "inner")
+    try:
+        return _run_rounds(
+            state,
+            iterations,
+            lambda s: (
+                msgs.join(s, msgs["frm"] == s["node"], "inner")
                 .select(
                     F.col("to").alias("node"),
-                    F.when(F.col("kind") == 2, F.col("auth"))
-                    .otherwise(0.0)
-                    .alias("h_c"),
-                    F.when(F.col("kind") == 1, F.col("hub"))
-                    .otherwise(0.0)
-                    .alias("a_c"),
+                    F.when(F.col("kind") == 2, F.col("auth")).otherwise(0.0).alias("h_c"),
+                    F.when(F.col("kind") == 1, F.col("hub")).otherwise(0.0).alias("a_c"),
                 )
                 .groupBy("node")
                 .agg(F.sum("h_c").alias("hub"), F.sum("a_c").alias("auth"))
-            )
-            if it % checkpoint_every == 0 or it == iterations:
-                nxt = nxt.transform(cut_lineage)
-                # GC only at checkpoint rounds (see pagerank)
-                gc.collect()
-            state = nxt
-    # final state is checkpointed — the cached message table can go
-    msgs.unpersist()
-    return state
+            ),
+            use_broadcast,
+        )
+    finally:
+        msgs.unpersist()
 
 
 def link_prediction(
@@ -1327,124 +1300,88 @@ def sssp_bounded(
     edges_w: DataFrame,
     source: int,
     rounds: int = 15,
-    checkpoint_every: int = 3,
-    broadcast_budget_bytes: int = 256 << 20,
 ) -> DataFrame:
     """Weighted single-source shortest distances within `rounds` hops
     (bounded Bellman-Ford): d_{k+1}(v) = min(d_k(v), min_{u->v} d_k(u) +
     w(u,v)), run for a FIXED round count so the result ("shortest
     distance using <= k edges") is exactly replayable in recursive SQL.
 
-    `edges_w`: (src, dst, w), non-negative weights. Same zero-shuffle
-    round mechanics as `pagerank`/`hits`: the edge table is augmented
-    once with zero-weight self-loops (carrying each node's own distance
-    forward, so a round is ONE join + min-aggregate with no union
-    against the previous state), partitioned once for the selected join
-    mode and cached (see `pagerank`), and the
-    distance table — which only ever holds REACHED nodes, a frontier
-    that grows like the ball around the source — is broadcast while it
-    fits `broadcast_budget_bytes`. Distances are sums of the input
-    weights selected by min: no divisions, so integer-valued weights
-    stay exact in double and the DuckDB oracle matches bit-for-bit.
+    `edges_w`: (src, dst, w), non-negative weights. The edge table is
+    augmented once with zero-weight self-loops (carrying each node's own
+    distance forward, so a round is ONE join + min-aggregate with no
+    union against the previous state) and built once (`_sssp_table`);
+    the rounds run under `_run_rounds` (join modes, partitioning and
+    lineage cuts are documented there). The distance table — which only
+    ever holds REACHED nodes, a frontier that grows like the ball around
+    the source — is broadcast at ~16 bytes/node. Distances are sums of
+    the input weights selected by min: no divisions, so integer-valued
+    weights stay exact in double and the DuckDB oracle matches
+    bit-for-bit.
 
     Output: (node, dist) for nodes within `rounds` hops of `source`.
     """
-    import gc
-
-    spark = edges_w.sparkSession
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    nodes = (
-        edges_w.select(F.col("src").alias("node"))
-        .unionByName(edges_w.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    n = nodes.count()
-    use_broadcast = n * 16 <= broadcast_budget_bytes
-    e_aug = (
-        edges_w.select("src", "dst", F.col("w").cast("double").alias("w"))
-        .unionByName(
-            nodes.select(
-                F.col("node").alias("src"),
-                F.col("node").alias("dst"),
-                F.lit(0.0).alias("w"),
-            )
-        )
-        # same persist-not-checkpoint / mode-keyed partitioning as
-        # pagerank: agg key (dst) for zero-shuffle broadcast rounds,
-        # join key (src) + shuffled-hash build for the fallback
-        .repartition(n_shuffle, "dst" if use_broadcast else "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    e_aug.count()  # materialize once
-
-    dist = e_aug.sparkSession.createDataFrame(
+    n = _node_ids(edges_w).count()
+    use_broadcast = n * 16 <= _BROADCAST_BUDGET_BYTES
+    e_aug = _sssp_table(edges_w, "dst" if use_broadcast else "src")
+    dist = edges_w.sparkSession.createDataFrame(
         [(int(source), 0.0)], "node long, dist double"
     )
-    with _aqe_off_for_rounds(spark, use_broadcast):
-        for it in range(1, rounds + 1):
-            build = (
-                F.broadcast(dist) if use_broadcast else dist.hint("shuffle_hash")
-            )
-            nxt = (
-                e_aug.join(build, e_aug["src"] == build["node"], "inner")
-                .select(
-                    e_aug["dst"].alias("node"),
-                    (F.col("dist") + F.col("w")).alias("d"),
-                )
-                .groupBy("node")
-                .agg(F.min("d").alias("dist"))
-            )
-            if it % checkpoint_every == 0 or it == rounds:
-                nxt = nxt.transform(cut_lineage)
-                # GC only at checkpoint rounds (see pagerank)
-                gc.collect()
-            dist = nxt
-    e_aug.unpersist()
-    return dist
+    try:
+        return _run_rounds(dist, rounds, lambda d: _sssp_step(e_aug, d), use_broadcast)
+    finally:
+        e_aug.unpersist()
+
+
+def _sssp_table(edges_w: DataFrame, key: str) -> DataFrame:
+    """`sssp_bounded`'s message table: the (src, dst, w) edges plus one
+    zero-weight self-loop per node, built by `_message_table` on `key`."""
+    loops = _node_ids(edges_w).select(
+        F.col("node").alias("src"), F.col("node").alias("dst"), F.lit(0.0).alias("w")
+    )
+    return _message_table(
+        edges_w.select("src", "dst", F.col("w").cast("double").alias("w")).unionByName(loops),
+        key,
+    )
+
+
+def _sssp_step(e_aug: DataFrame, dist: DataFrame) -> DataFrame:
+    """One `sssp_bounded` relaxation round: the (node, dist) build side
+    relaxed along `_sssp_table` into the next (node, dist)."""
+    return (
+        e_aug.join(dist, e_aug["src"] == dist["node"], "inner")
+        .select(e_aug["dst"].alias("node"), (F.col("dist") + F.col("w")).alias("d"))
+        .groupBy("node")
+        .agg(F.min("d").alias("dist"))
+    )
 
 
 def prepare_bfs_edges(und_edges: DataFrame) -> DataFrame:
-    """Build, partition and persist the self-loop-augmented edge table
-    `multi_source_bfs` relaxes against (r13: factored out so callers
+    """Build the self-loop-augmented edge table `multi_source_bfs`
+    relaxes against, partitioned by `dst` (`_message_table`), so callers
     that sweep the SAME graph repeatedly — graph_diameter_double_sweep's
-    two sweeps — pay the distinct + repartition + materialize cost
-    once). Caller owns the returned persist (unpersist when done)."""
-    spark = und_edges.sparkSession
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    nodes = (
-        und_edges.select(F.col("src").alias("node"))
-        .unionByName(und_edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    e_aug = (
+    two sweeps — pay the distinct + repartition + materialize cost once.
+    Caller owns the returned persist (unpersist when done)."""
+    nodes = _node_ids(und_edges)
+    return _message_table(
         und_edges.select(
             F.col("src").cast("long").alias("src"),
             F.col("dst").cast("long").alias("dst"),
             F.lit(1).alias("w"),
-        )
-        .unionByName(
+        ).unionByName(
             nodes.select(
                 F.col("node").cast("long").alias("src"),
                 F.col("node").cast("long").alias("dst"),
                 F.lit(0).alias("w"),
             )
-        )
-        # persist, not localCheckpoint (UnknownPartitioning — see
-        # pagerank): with the dst partitioning visible, the broadcast
-        # join preserves it and the (src_id, node=dst) aggregate needs
-        # no exchange — rounds are zero-shuffle
-        .repartition(n_shuffle, "dst")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ),
+        "dst",
     )
-    e_aug.count()  # materialize once
-    return e_aug
 
 
 def multi_source_bfs(
     und_edges: DataFrame,
     sources: list[int],
     rounds: int = 6,
-    checkpoint_every: int = 3,
     prepared: DataFrame | None = None,
 ) -> DataFrame:
     """Exact shortest hop-distances from a small set of landmark sources
@@ -1456,27 +1393,26 @@ def multi_source_bfs(
     `und_edges`: (src, dst) ALREADY undirected (both orientations
     present). State is (src_id, node, dist) — |sources| x reached-ball
     rows, a small multiple of the node count for small landmark sets, so
-    the distance table is broadcast into each relaxation round: a round
-    is ONE broadcast-hash join + min-aggregate, zero shuffle on the edge
-    side. Self-loops carry settled distances forward (same mechanics as
-    `sssp_bounded` with w=1 on real edges, w=0 on loops); lineage is cut
-    with localCheckpoint. Output: (src_id, node, dist INT).
+    the distance table is ALWAYS broadcast: `_run_rounds` in broadcast
+    mode, a round is ONE broadcast-hash join + min-aggregate, zero
+    shuffle. Self-loops carry settled distances forward (w=1 on real
+    edges, w=0 on loops — `sssp_bounded` with unit weights). Output:
+    (src_id, node, dist INT).
 
     `prepared`: a prepare_bfs_edges() result for the same graph — the
     augmented table is then reused as-is (and NOT unpersisted here).
     """
-    import gc
-
     spark = und_edges.sparkSession
     e_aug = prepared if prepared is not None else prepare_bfs_edges(und_edges)
-
     dist = spark.createDataFrame(
         [(int(s), int(s), 0) for s in sources], "src_id long, node long, dist int"
     )
-    with _aqe_off_for_rounds(spark, True):
-        for it in range(1, rounds + 1):
-            nxt = (
-                e_aug.join(F.broadcast(dist), e_aug["src"] == dist["node"], "inner")
+    try:
+        return _run_rounds(
+            dist,
+            rounds,
+            lambda d: (
+                e_aug.join(d, e_aug["src"] == d["node"], "inner")
                 .select(
                     "src_id",
                     e_aug["dst"].alias("node"),
@@ -1484,15 +1420,11 @@ def multi_source_bfs(
                 )
                 .groupBy("src_id", "node")
                 .agg(F.min("d").alias("dist"))
-            )
-            if it % checkpoint_every == 0 or it == rounds:
-                nxt = nxt.transform(cut_lineage)
-                # GC only at checkpoint rounds (see pagerank)
-                gc.collect()
-            dist = nxt
-    if prepared is None:
-        e_aug.unpersist()
-    return dist
+            ),
+        )
+    finally:
+        if prepared is None:
+            e_aug.unpersist()
 
 
 def closeness_from_landmarks(bfs_dist: DataFrame) -> DataFrame:

@@ -1035,19 +1035,21 @@ def graph_diameter_double_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both sweeps relax the SAME graph: build the augmented edge table
     # once (r13 — it was distinct+repartitioned+materialized per sweep)
     aug = prepare_bfs_edges(und)
-    d1 = multi_source_bfs(und, [start], rounds=8, prepared=aug)
-    far = (
-        d1.orderBy(F.desc("dist"), "node").limit(1).collect()[0]["node"]
-    )
-    d2 = multi_source_bfs(und, [far], rounds=8, prepared=aug).persist()
-    out = d2.agg(
-        F.lit(start).cast("int").alias("start_node"),
-        F.lit(far).cast("int").alias("far_node"),
-        F.max("dist").cast("int").alias("diameter_lower_bound"),
-        F.count("*").cast("bigint").alias("reached_from_far"),
-    )
-    rows = out.collect()
-    aug.unpersist()
+    try:
+        d1 = multi_source_bfs(und, [start], rounds=8, prepared=aug)
+        far = (
+            d1.orderBy(F.desc("dist"), "node").limit(1).collect()[0]["node"]
+        )
+        d2 = multi_source_bfs(und, [far], rounds=8, prepared=aug).persist()
+        out = d2.agg(
+            F.lit(start).cast("int").alias("start_node"),
+            F.lit(far).cast("int").alias("far_node"),
+            F.max("dist").cast("int").alias("diameter_lower_bound"),
+            F.count("*").cast("bigint").alias("reached_from_far"),
+        )
+        rows = out.collect()
+    finally:
+        aug.unpersist()
     und.unpersist()
     d2.unpersist()
     return spark.createDataFrame(

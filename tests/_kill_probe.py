@@ -6,12 +6,14 @@ Runs pagerank (12 rounds, real parquet edges) on
 closest a single box gets to cluster fault injection — and, unless
 --no-kill, SIGKILLs one CoarseGrainedExecutorBackend mid-iteration.
 Kill timing is deterministic, not wall-clock: a driver-side wrapper
-counts cut_lineage calls and the watcher fires after the SECOND
-round-state truncation (round 6 of 12), when the plan's lineage ends at
-checkpointed state that rounds 7-12 must read back. Killing earlier
-proves nothing — pre-checkpoint stages recompute from the parquet
-scan's intact lineage and the job survives in either mode (the flake
-the first wall-clock watcher actually hit).
+counts cut_lineage calls and the watcher fires after the SECOND one.
+pagerank's first two truncations are its edge table and its node table,
+so the kill lands before round 1: the plan's lineage now ends at
+checkpointed state that the message table, the initial ranks and all
+12 rounds must read back. Killing earlier proves nothing —
+pre-checkpoint stages recompute from the parquet scan's intact lineage
+and the job survives in either mode (the flake the first wall-clock
+watcher actually hit).
 
 Usage: _kill_probe.py <reliable|default> <ckpt_dir> <sf_dir> [--no-kill]
 Prints `RESULT <sha16> rows=N killed=PID|None secs=S` and exits 0 on
@@ -62,11 +64,12 @@ from citegraph_spark.operators import graph as graph_ops  # noqa: E402
 from citegraph_spark.operators.graph import pagerank  # noqa: E402
 
 # Deterministic kill timing: wrap cut_lineage so the watcher fires only
-# after the SECOND round-state truncation completed — at that point
-# truncated state provably exists (and is all the job has: its lineage
-# ends at the checkpoint) while later rounds still need it. Killing any
-# earlier proves nothing: every stage would still be recomputable from
-# the parquet scan's intact lineage and the job survives in either mode.
+# after the SECOND truncation completed (pagerank's node table; the first
+# is its edge table) — at that point truncated state provably exists (and
+# is all the job has: its lineage ends at the checkpoint) while every
+# round still needs it. Killing any earlier proves nothing: every stage
+# would still be recomputable from the parquet scan's intact lineage and
+# the job survives in either mode.
 _cuts = {"n": 0}
 _orig_cut = graph_ops.cut_lineage
 
@@ -103,10 +106,10 @@ def _watcher() -> None:
     deadline = time.time() + 180
     while time.time() < deadline:
         time.sleep(0.25)
-        # fire after the second round-state truncation: the plan's
-        # lineage now ENDS at checkpointed state (localCheckpoint
-        # blocks in executor storage / reliable files on the DFS) that
-        # the remaining rounds must read back
+        # fire after the second truncation (the node table, before
+        # round 1): the plan's lineage now ENDS at checkpointed state
+        # (localCheckpoint blocks in executor storage / reliable files
+        # on the DFS) that all 12 rounds must read back
         if _cuts["n"] >= 2:
             break
     pids = _executor_pids()

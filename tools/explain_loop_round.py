@@ -1,7 +1,8 @@
 """Dump the per-round physical plan of the fixed-round broadcast loops
 (pagerank / hits / sssp) — the registered queries' own explain is the
-final small output plan, so this reproduces the plan ONE relaxation
-round actually executes, exactly as the operator builds it (r13
+final small output plan, so this builds ONE sssp_bounded relaxation
+round from the operator's own message table (`_sssp_table`) and round
+step (`_sssp_step`), in broadcast mode, and prints its plan (r13
 evidence for plans/r13/loop_round_{before,after}.txt).
 
 Usage: python tools/explain_loop_round.py [--aqe-on]
@@ -19,13 +20,18 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
-from pyspark.storagelevel import StorageLevel  # noqa: E402
 
 
 def main() -> int:
     aqe_on = "--aqe-on" in sys.argv
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
+    from citegraph_spark.lineage import cut_lineage
+    from citegraph_spark.operators.graph import (
+        _aqe_off_for_rounds,
+        _sssp_step,
+        _sssp_table,
+    )
     from citegraph_spark.plans.entry_queries import _citations
     from citegraph_spark.session import get_spark
 
@@ -36,41 +42,12 @@ def main() -> int:
         F.col("to").cast("long").alias("dst"),
         (1 + F.col("to") % 5).cast("double").alias("w"),
     )
-    nodes = (
-        edges_w.select(F.col("src").alias("node"))
-        .unionByName(edges_w.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    e_aug = (
-        edges_w.unionByName(
-            nodes.select(
-                F.col("node").alias("src"),
-                F.col("node").alias("dst"),
-                F.lit(0.0).alias("w"),
-            )
-        )
-        .repartition(n_shuffle, "dst")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    e_aug.count()
-
-    from citegraph_spark.lineage import cut_lineage
-    from citegraph_spark.operators.graph import _aqe_off_for_rounds
-
+    e_aug = _sssp_table(edges_w, "dst")
     dist0 = cut_lineage(
         spark.createDataFrame([(1, 0.0)], "node long, dist double")
     )
     with _aqe_off_for_rounds(spark, not aqe_on):
-        rnd = (
-            e_aug.join(F.broadcast(dist0), e_aug["src"] == dist0["node"], "inner")
-            .select(
-                e_aug["dst"].alias("node"),
-                (F.col("dist") + F.col("w")).alias("d"),
-            )
-            .groupBy("node")
-            .agg(F.min("d").alias("dist"))
-        )
+        rnd = _sssp_step(e_aug, F.broadcast(dist0))
         print(f"=== sssp_bounded relaxation round (AQE {'ON' if aqe_on else 'OFF'}) ===")
         rnd.explain("formatted")
     e_aug.unpersist()
